@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from byzer_retrieval_spark.operators import mutate
-from byzer_retrieval_spark.operators.context import IndexContext
+from byzer_retrieval_spark.operators.context import IndexContext, local_frame
 from byzer_retrieval_spark.operators.indexer import IndexConfig, build_index
 from byzer_retrieval_spark.operators.fusion import rrf_fuse, score_sum_fuse
 from byzer_retrieval_spark.operators.scorer_df import filter_query, search_df
@@ -24,29 +24,34 @@ from byzer_retrieval_spark.operators.wand import search_fast
 from byzer_retrieval_spark.plans.query import SearchQuery
 from byzer_retrieval_spark.sources.storage import IndexStore
 
+# Postings bytes one read-path Python task scores. Every Python task
+# pays ~0.3 s of worker CPU before it reads a row, most of it pyspark's
+# per-task importlib.invalidate_caches() re-listing the zip importers
+# (pyspark 4.1: 13.9 s of 14.9 s in worker.main across the 59 tasks of
+# one 1,000-file search round), so scans and shuffles are sized to this
+# many bytes per task, not to the core count; files of at least this
+# size keep one file per task. Chosen from perfbench search rounds on
+# 8-shard tables, local[4] on a 4-core x86 VM; median search wall time
+# and round CPU seconds (medians of 3 runs, 2 for 16 MB on 200k files,
+# 1 for 32 MB on 50k files, whose plans equal 64 MB's there; the old
+# core-count sizing ran one task per file, 8 tasks, on both tables):
+#   table (postings)     old sizing    16 MB         32 MB         64 MB
+#   50k files (18 MB)    1.18 s  60 s  0.81 s  32 s  0.83 s  28 s  0.80 s  27 s
+#   200k files (74 MB)   1.50 s  75 s  1.53 s  72 s  1.07 s  53 s  1.25 s  49 s
+# Tasks beyond the core count run in a second wave (16 MB: 8 tasks on
+# the 200k table), and 64 MB packs that table unevenly (6 + 2 files);
+# 32 MB scores it in 3 tasks. The JVM scans of the same session (docs,
+# stats, vectors) are packed by this rule too: filtered keyword and
+# filtered vector searches stayed within 4% of the old sizing, most of
+# them faster, on both tables (docs of 21 and 83 MB).
+PY_TASK_BYTES = 32 << 20
+
 
 class RetrievalEngine:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self._qspark: Optional[SparkSession] = None
         self._ctx_cache: Dict[Any, Any] = {}
-
-    @property
-    def query_spark(self) -> SparkSession:
-        """Dedicated session for the READ path (shares the
-        SparkContext/executors, own SQLConf) with adaptive execution
-        OFF: AQE's stage-by-stage re-planning adds ~1 s to every
-        sub-second query (measured p50 2.45 s → 1.33 s on the 600k
-        bench corpus), and queries don't need it — their joins are
-        explicitly broadcast-hinted or statically broadcast from
-        parquet size stats, and skew handling matters only at build
-        time (builds keep the main session with AQE on)."""
-        if self._qspark is None:
-            s = self.spark.newSession()
-            s.conf.set("spark.sql.adaptive.enabled", "false")
-            self._qspark = s
-        return self._qspark
 
     def store(self, database: str = "default", table: str = "default") -> IndexStore:
         return IndexStore(self.root, database, table)
@@ -68,46 +73,8 @@ class RetrievalEngine:
         hit = self._ctx_cache.get(key)
         if hit is not None and hit[0] == sid:
             return hit[1]
-        ctx = IndexContext.open(self.query_spark, store)
-        # shuffle partitions sized to the index, not the session default
-        # (round 6): every query-path exchange keys on shard_id (scorer
-        # cogroups, gate frames), whose cardinality IS num_shards —
-        # partitions beyond that are empty tasks that still pay Python
-        # worker round trips. Scale-adaptive by construction: a 100 TB
-        # table has thousands of shards and gets thousands of partitions.
-        self.query_spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(8, int(ctx.meta.get("num_shards", 8)))),
-        )
-        # pin the split size just above the largest postings file
-        # (round 6): the zero-exchange WAND stream path
-        # (wand._shard_stream_runner) requires that no parquet file is
-        # ever SPLIT across scan tasks — a split would separate a doc's
-        # postings from its gate evidence. One listing per snapshot
-        # (cached with the context); the +1 MB headroom matches
-        # openCostInBytes so same-size sibling files don't pack two to
-        # a task (keeps scan parallelism at one-file-per-task, the
-        # shard-granular layout queries want at every scale).
-        try:
-            jvm = self.query_spark._jvm
-            jpath = jvm.org.apache.hadoop.fs.Path(store.postings_path)
-            fs = jpath.getFileSystem(
-                self.query_spark._jsc.hadoopConfiguration()
-            )
-            it = fs.listFiles(jpath, True)
-            mx = 0
-            while it.hasNext():
-                mx = max(mx, int(it.next().getLen()))
-            self.query_spark.conf.set(
-                "spark.sql.files.maxPartitionBytes",
-                str(max(4 << 20, mx + (1 << 20) + 1)),
-            )
-            ctx.__dict__["_stream_safe"] = True
-        except Exception:
-            # listing failed → the no-file-split guarantee is NOT
-            # established; the flag stays unset and wand falls back to
-            # the exchange-based scorer (correct at any split size)
-            ctx.__dict__["_stream_safe"] = False
+        ctx = IndexContext.open(self.spark.newSession(), store)
+        ctx.__dict__["_stream_safe"] = _size_query_session(ctx)
         self._ctx_cache[key] = (sid, ctx)
         return ctx
 
@@ -326,10 +293,9 @@ class RetrievalEngine:
     def shutdown(self) -> None:
         """Reference ``Shutdown`` action (RetrievalFlightServer.java:354):
         release engine-held resources. The shared SparkContext belongs
-        to the caller and is NOT stopped — only the engine's caches and
-        its dedicated query session are dropped."""
+        to the caller and is NOT stopped — only the engine's caches, and
+        with them the opened contexts' query sessions, are dropped."""
         self._ctx_cache.clear()
-        self._qspark = None
 
     # ---- persisted ANN over the table's vector column -------------------
     def build_vector_ann(
@@ -849,8 +815,8 @@ class RetrievalEngine:
                     for (fld, toks), lid in spec_lid.items()
                     for t in toks
                 ]
-                spec_df = ctx.spark.createDataFrame(
-                    pairs, "lid int, field string, term string"
+                spec_df = local_frame(
+                    ctx.spark, pairs, "lid int, field string, term string"
                 )
                 hits = (
                     flat_postings(
@@ -869,7 +835,11 @@ class RetrievalEngine:
                     .groupBy("__docid")
                     .agg(F.collect_set("lid").alias("__af_set"))
                 )
-                docs = docs.join(hits, "__docid", "left")
+                # a shuffle join inside the query's one job: the
+                # membership set can hold every doc of the table, so it
+                # is never broadcast on the strength of the tiny spec
+                # frame's size estimate
+                docs = docs.join(hits.hint("merge"), "__docid", "left")
 
             def leaf_fn(leaf: Dict[str, Any]) -> Column:
                 lid = leaf_lid.get(id(leaf))
@@ -884,9 +854,10 @@ class RetrievalEngine:
             for qid, q in batched:
                 sk = _json.dumps(q.sorts or [], sort_keys=True)
                 groups.setdefault(sk, []).append((qid, q))
-            # created on the CONTEXT's session (the dedicated query
-            # session) so the join stays within one SQLConf
-            lim_df = ctx.spark.createDataFrame(
+            # created on the CONTEXT's own query session so the join
+            # stays within one SQLConf
+            lim_df = local_frame(
+                ctx.spark,
                 [(int(qid), int(q.limit)) for qid, q in batched],
                 "query_id int, __klim int",
             )
@@ -1087,7 +1058,8 @@ class RetrievalEngine:
         kw_hyb = None
         if kw_queries:
             kwin = batch_search_winners(ctx, kw_queries)
-            pos_df = spark.createDataFrame(
+            pos_df = local_frame(
+                spark,
                 [(int(pos), int(cq), bool(hy)) for pos, cq, hy in kw_specs],
                 "query_id int, __cqid int, __hy boolean",
             )
@@ -1258,7 +1230,8 @@ class RetrievalEngine:
             both = both_parts[0]
             for p in both_parts[1:]:
                 both = both.unionByName(p)
-            limits = spark.createDataFrame(
+            limits = local_frame(
+                spark,
                 [
                     (int(qid), int(q.limit))
                     for qid, q in [
@@ -1301,7 +1274,8 @@ class RetrievalEngine:
                 database,
                 table,
             )
-            remap = spark.createDataFrame(
+            remap = local_frame(
+                spark,
                 [(pos, int(qid)) for pos, (qid, _) in enumerate(ma_items)],
                 "query_id int, __cqid int",
             )
@@ -1413,3 +1387,64 @@ class RetrievalEngine:
         out = docs.filter(F.col("_id").isin([str(i) for i in ids]))
         out = ctx.exclude_tombstones(out)
         return out.select(*ctx.stored_columns()).orderBy("_id")
+
+
+def _size_query_session(ctx: IndexContext) -> bool:
+    """Sets the SQLConf of an opened context's own session — once, when
+    the context opens; the read path never sets a conf after that. The
+    session shares the SparkContext (executors, cache) but not the
+    SQLConf, so contexts of different tables (or snapshots) cannot race
+    each other's scan and shuffle sizing. Returns whether the
+    zero-exchange stream route is safe on this context.
+
+    Adaptive execution is OFF: AQE's stage-by-stage re-planning adds
+    ~1 s to every sub-second query (measured p50 2.45 s → 1.33 s on the
+    600k bench corpus), and queries don't need it — their joins are
+    explicitly broadcast-hinted or statically broadcast from parquet
+    size stats, and skew handling matters only at build time (builds
+    keep the main session with AQE on).
+
+    Python stages are sized to the postings bytes they score, not to the
+    core count (see ``PY_TASK_BYTES``):
+
+    - ``minPartitionNum=1`` and ``maxPartitionBytes`` above the largest
+      postings file + openCost. Spark's split size is
+      ``min(maxPartitionBytes, max(openCost, scanned bytes /
+      minPartitionNum))``, so no postings file can split across scan
+      tasks — the zero-exchange stream scorer
+      (``wand._shard_stream_runner``) is only correct under that
+      guarantee — and small files pack into one task up to
+      ``PY_TASK_BYTES``.
+    - ``shuffle.partitions`` = postings bytes / ``PY_TASK_BYTES``,
+      clamped to [1, num_shards]: every read-path exchange keys on
+      shard_id (scorer cogroups, gate frames) or on a query id.
+
+    When the postings listing fails the route is unsafe, and queries
+    take the exchange-based scorers, which are correct at any split
+    size."""
+    conf = ctx.spark.conf
+    conf.set("spark.sql.adaptive.enabled", "false")
+    num_shards = int(ctx.meta.get("num_shards", 8))
+    try:
+        jvm = ctx.spark._jvm
+        jpath = jvm.org.apache.hadoop.fs.Path(ctx.store.postings_path)
+        fs = jpath.getFileSystem(ctx.spark._jsc.hadoopConfiguration())
+        it = fs.listFiles(jpath, True)
+        largest = total = 0
+        while it.hasNext():
+            n = int(it.next().getLen())
+            largest, total = max(largest, n), total + n
+    except Exception:
+        conf.set("spark.sql.shuffle.partitions", str(num_shards))
+        return False
+    open_cost = ctx.spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    conf.set("spark.sql.files.minPartitionNum", "1")
+    conf.set(
+        "spark.sql.files.maxPartitionBytes",
+        str(max(largest + int(open_cost) + 1, PY_TASK_BYTES)),
+    )
+    conf.set(
+        "spark.sql.shuffle.partitions",
+        str(min(max(-(-total // PY_TASK_BYTES), 1), num_shards)),
+    )
+    return True

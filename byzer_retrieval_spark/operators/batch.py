@@ -49,7 +49,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from byzer_retrieval_spark.operators.context import IndexContext
+from byzer_retrieval_spark.operators.context import (
+    IndexContext,
+    local_frame,
+    scanned_df,
+)
 from byzer_retrieval_spark.operators.decode import decode_rows
 from byzer_retrieval_spark.plans.query import (
     ParsedKeyword,
@@ -213,11 +217,7 @@ def _make_batch_scorer(
             n_docs, avgdl = fs(fld)
             # df_map (round 6): driver-resolved term dictionary — the
             # zero-exchange stream frame carries no df column
-            df = (
-                df_map[(fld, term)]
-                if df_map is not None
-                else float(g["df"].iloc[0])
-            )
+            df = scanned_df(df_map, fld, term, g)
             idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
             docs, tfs, dls, _ = decode_rows(
                 g["doc_gaps"], g["tfs"], g["dls"], g["first_doc"]
@@ -978,7 +978,8 @@ def _limits_df(ctx: IndexContext, specs) -> DataFrame:
     # per-query limits via a broadcast join — a WHEN-chain over 1,000
     # query ids made the Catalyst expression tree (and optimize time)
     # scale with the batch size
-    return ctx.spark.createDataFrame(
+    return local_frame(
+        ctx.spark,
         [(int(s["qid"]), int(s["k"])) for s in specs],
         "query_id int, __klim int",
     )

@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Any, Dict, List, Optional
+from typing import Any, Dict, List, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -11,6 +11,49 @@ from byzer_retrieval_spark.sources.storage import IndexStore
 
 
 _MISS = object()
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], schema: str) -> DataFrame:
+    """A small driver-built frame (query specs, limits, id remaps, query
+    vectors) shipped to the JVM as one Arrow table. The plan is a
+    ``LocalTableScan``: no Python task ever runs for it.
+    ``createDataFrame(list)`` instead parallelizes pickled rows, and
+    every execution of such a frame runs one Python task per
+    default-parallelism slice (0.3 s of worker set-up each). ``schema``
+    is a DDL string; values keep their exact bits (a Python float is a
+    float64 in Arrow and in Spark's DoubleType)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=struct)
+
+
+def scanned_df(df_map, fld: str, term: str, rows) -> float:
+    """Global df of a (field, term) a scorer has postings rows for: from
+    the driver-read dictionary (``IndexContext.term_dfs``) when the
+    scorer carries one, else from the rows' own df column. Every pair
+    with postings has a stats row — the stats are aggregated from the
+    postings at every commit — so a miss means the table's stats and
+    postings disagree, and it is reported as that, not as a bare
+    KeyError inside an executor."""
+    if df_map is None:
+        return float(rows["df"].iloc[0])
+    try:
+        return df_map[(fld, term)]
+    except KeyError:
+        raise RuntimeError(
+            f"the stats table has no df for ({fld!r}, {term!r}) although "
+            "its postings were scanned: the table's stats and postings "
+            "disagree; compact or rebuild the table to rewrite its stats"
+        ) from None
 
 
 @dataclass
@@ -140,10 +183,14 @@ class IndexContext:
         dictionary — metadata-scale — and a query touches a handful of
         terms, so this is a 2-10 ms driver read that replaces a whole
         broadcast-build job on the zero-exchange paths (exactly like
-        Lucene reading its term dictionary on the searcher). Returns
-        None when the read is not possible (non-local store, pre-r4
-        layout without len_bucket) — callers fall back to the broadcast
-        stats join."""
+        Lucene reading its term dictionary on the searcher).
+
+        Returns None when the read is not possible (non-local store,
+        pre-r4 layout without len_bucket) — callers fall back to the
+        broadcast stats join. A requested pair absent from the
+        dictionary is absent from the map too: the stats are aggregated
+        from the postings at every commit, so such a pair has no
+        postings and no scorer looks it up (see ``scanned_df``)."""
         terms = list(dict.fromkeys(terms))
         if not terms:
             return {}

@@ -37,7 +37,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from byzer_retrieval_spark.operators.context import IndexContext
+from byzer_retrieval_spark.operators.context import IndexContext, local_frame
 from byzer_retrieval_spark.operators.decode import flat_postings
 from byzer_retrieval_spark.plans.query import (
     _leaf_to_column,
@@ -197,7 +197,8 @@ def expand_fuzzy_many(
         .select("field", "term")
         .distinct()
     )
-    specs = ctx.spark.createDataFrame(
+    specs = local_frame(
+        ctx.spark,
         [
             (i, w, int(n), list(flds))
             for i, (flds, w, n) in enumerate(items)

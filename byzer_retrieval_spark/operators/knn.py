@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from byzer_retrieval_spark.functions.similarity import _cosine_expr
-from byzer_retrieval_spark.operators.context import IndexContext
+from byzer_retrieval_spark.operators.context import IndexContext, local_frame
 from byzer_retrieval_spark.plans.query import SearchQuery
 
 
@@ -149,7 +149,8 @@ def _batch_tagged_candidates(ctx: IndexContext, items, index, **probe_kw):
     # full fat candidate set for nothing (round 6)
     replicated = getattr(index, "replicated", True)
     if key_rows is not None:
-        kdf = spark.createDataFrame(
+        kdf = local_frame(
+            spark,
             key_rows,
             ", ".join(
                 ["query_id int"] + [f"{c} int" for c in key_cols]
@@ -237,7 +238,7 @@ def batch_vector_winners_ann_filtered(ctx: IndexContext, items, index, **probe_k
             "shard_id", "__docid", F.lit(gid).alias("__gid")
         )
         allow = part if allow is None else allow.unionByName(part)
-    gmap = spark.createDataFrame(qid_gid, "query_id int, __gid int")
+    gmap = local_frame(spark, qid_gid, "query_id int, __gid int")
     keys = tagged.join(F.broadcast(gmap), "query_id").select(
         "query_id", "shard_id", "__docid", "__gid"
     )
@@ -257,7 +258,8 @@ def batch_vector_winners_ann_filtered(ctx: IndexContext, items, index, **probe_k
         return None, under
     filled_ids = {int(qid) for qid, _ in filled}
     keep = F.col("query_id").isin(sorted(filled_ids))
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [r for r in qrows if int(r[0]) in filled_ids],
         "query_id int, __qvec array<double>, __qnorm double, __klim int",
     )
@@ -399,8 +401,8 @@ def batch_vector_winners_ann(
 
     spark = ctx.spark
     tagged, qrows = _batch_tagged_candidates(ctx, items, index, **probe_kw)
-    qdf = spark.createDataFrame(
-        qrows, "query_id int, __qvec array<double>, __qnorm double, __klim int"
+    qdf = local_frame(
+        spark, qrows, "query_id int, __qvec array<double>, __qnorm double, __klim int"
     )
     scored = (
         tagged.join(F.broadcast(qdf), "query_id")

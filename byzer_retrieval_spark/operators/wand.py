@@ -46,29 +46,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from byzer_retrieval_spark.operators.context import IndexContext
+from byzer_retrieval_spark.operators.context import IndexContext, scanned_df
 from byzer_retrieval_spark.operators.decode import decode_rows
 from byzer_retrieval_spark.plans.query import SearchQuery, parse_keyword
 
 # below this many blocks per shard, exhaustive scoring beats
-# bookkeeping. The BYZER_PRUNE_MIN_BLOCKS env override (set huge to
-# force the exhaustive path for A/B) is resolved ON THE DRIVER at
-# query time and captured into the scorer closure — on a real cluster
-# executors re-import modules against their own environment, so an
-# import-time read would silently ignore the override there.
-import os as _os
-
+# bookkeeping
 PRUNE_MIN_BLOCKS = 32
-
-
-def _prune_min_blocks() -> int:
-    return int(_os.environ.get("BYZER_PRUNE_MIN_BLOCKS", PRUNE_MIN_BLOCKS))
-
-
-def _conj_enabled() -> bool:
-    """A/B switch for the conjunctive MUST block restriction (round 4)
-    — driver-resolved like _prune_min_blocks. Lossless either way."""
-    return _os.environ.get("BYZER_CONJ_RESTRICT", "1") != "0"
 
 _OUT_SCHEMA = "shard_id int, __docid long, score double"
 
@@ -405,8 +389,6 @@ def _make_shard_scorer(
     prefix_specs: Tuple[Tuple[str, str, str], ...] = (),
     termset_specs: Tuple[Tuple[str, Tuple[str, ...], str], ...] = (),
     any_groups: Tuple[Tuple[str, ...], ...] = (),
-    prune_min_blocks: Optional[int] = None,
-    conj_restrict: Optional[bool] = None,
     docid_id_order: bool = False,
     bool_group_specs: Tuple[Tuple[str, Tuple, Tuple, Tuple], ...] = (),
     per_shard_stats: bool = False,
@@ -483,10 +465,6 @@ def _make_shard_scorer(
     exhaustive-scoring cost as the declarative path but distributed
     per shard with no groupBy shuffle, and batchable.
     """
-    if prune_min_blocks is None:
-        prune_min_blocks = _prune_min_blocks()  # driver-resolved
-    if conj_restrict is None:
-        conj_restrict = _conj_enabled()
     scoring_set = set(scoring_terms)
     # nested-boolean-group TERM members: decoded like clauses but their
     # contributions are tracked per term (conditional add), not summed
@@ -542,11 +520,7 @@ def _make_shard_scorer(
             n_docs, avgdl = fs(fld)
             # df_map (round 6): driver-resolved term dictionary entries
             # — the zero-exchange path carries no df column at all
-            df = (
-                df_map[(fld, term)]
-                if df_map is not None
-                else float(g["df"].iloc[0])
-            )
+            df = scanned_df(df_map, fld, term, g)
             idf = math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
             max_tf = g["max_tf"].to_numpy(np.float64)
             min_dl = g["min_dl"].to_numpy(np.float64)
@@ -590,7 +564,7 @@ def _make_shard_scorer(
 
         shard_fields = sorted(set(pdf["field"]) & set(field_stats))
         restrictions = []  # one (rf, rl) interval union per MUST clause
-        for t in set(must_terms) if conj_restrict else ():
+        for t in set(must_terms):
             restrictions.append(
                 _union([(c["firsts"], c["lasts"]) for c in cl if c["term"] == t])
             )
@@ -598,7 +572,7 @@ def _make_shard_scorer(
             [(pk, ("prefix", st), kd) for pk, st, kd in prefix_specs]
             + [(pk, ("set", ts), kd) for pk, ts, kd in termset_specs]
         ):
-            if kind != "must" or not conj_restrict:
+            if kind != "must":
                 continue
             blks = []
             for fld_e in shard_fields:
@@ -617,7 +591,7 @@ def _make_shard_scorer(
                     )
             restrictions.append(_union(blks))
         for pkey, p_terms, kind, slop in phrase_specs:
-            if kind != "must" or not conj_restrict:
+            if kind != "must":
                 continue
             # a phrase doc lies in EVERY member's intervals (per field);
             # clause restriction = union over fields of the per-field
@@ -718,11 +692,7 @@ def _make_shard_scorer(
                         g["doc_gaps"], g["tfs"], g["dls"], g["first_doc"]
                     )
                     doc_data[t] = (g, docs, tfs, dls)
-                    dfs[t] = (
-                        df_map[(fld, t)]
-                        if df_map is not None
-                        else float(g["df"].iloc[0])
-                    )
+                    dfs[t] = scanned_df(df_map, fld, t, g)
 
                 def phrase_datas(terms: Tuple[str, ...]):
                     """Per-member (docs, tfs, dls, pos). When the
@@ -1026,7 +996,7 @@ def _make_shard_scorer(
             kind == "should" for _, kind in extra_kinds
         )
         use_prune = (
-            total_blocks > prune_min_blocks
+            total_blocks > PRUNE_MIN_BLOCKS
             and bool(cl)
             and (not extra_kinds or prunable_extras)
             # conditional group contributions break the monotone
@@ -1079,11 +1049,7 @@ def _make_shard_scorer(
                         tg = fp[fp["term"] == t]
                         if not len(tg):
                             break
-                        dfs[t] = (
-                            df_map[(fld, t)]
-                            if df_map is not None
-                            else float(tg["df"].iloc[0])
-                        )
+                        dfs[t] = scanned_df(df_map, fld, t, tg)
                     else:
                         idf_sum = sum(
                             math.log(1.0 + (n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5))
@@ -1279,16 +1245,17 @@ def _shard_stream_runner(score_shard):
     Correctness without the shard exchange: every doc's complete
     evidence (all its postings for every candidate term, including
     positions) lives in ONE parquet file — builds write one file set
-    per shard and mutations append whole-doc deltas — and the caller
-    pins ``spark.sql.files.maxPartitionBytes`` above the largest
-    postings file so no file ever splits across tasks. A shard split
-    across several groups (multi-file shards after upserts, or packing
-    order) only partitions its DOCS across groups; per-group exact
-    scoring + per-group top-k then emits a SUPERSET of the shard's
-    possible global winners (global top-k ⊆ union of per-group top-k
-    for any doc partition), and the global (score desc, _id asc)
-    orderBy + limit downstream settles the final ranking exactly as it
-    already must for boundary ties. df/idf are global (broadcast-joined
+    per shard and mutations append whole-doc deltas — and the context's
+    query session (api._size_query_session) sets ``minPartitionNum=1``
+    and ``maxPartitionBytes`` above the largest postings file, so no
+    file ever splits across tasks; several files and shards may share
+    one task. A shard split across several groups (multi-file shards
+    after upserts, or packing order) only partitions its DOCS across
+    groups; per-group exact scoring + per-group top-k then emits a
+    SUPERSET of the shard's possible global winners (global top-k ⊆
+    union of per-group top-k for any doc partition), and the global
+    (score desc, _id asc) orderBy + limit downstream settles the final
+    ranking exactly as it already must for boundary ties. df/idf are global (broadcast-joined
     onto the scanned rows), so partial groups score identically."""
 
     def gen(batches):
@@ -1487,9 +1454,8 @@ def search_wand(ctx: IndexContext, query: SearchQuery) -> Optional[DataFrame]:
     # candidate terms (len_bucket partition filters); rows reached only
     # through a prefix stem keep a null df (their clauses score the
     # constant 1.0 and never read it). Correct for partial shard groups
-    # — see _shard_stream_runner. api.query_ctx pins
-    # spark.sql.files.maxPartitionBytes above the largest postings file
-    # so no file splits across tasks.
+    # — see _shard_stream_runner. The context's query session is sized
+    # so that no postings file splits across tasks (_stream_safe).
     if (
         gate_mode == "none"
         and not ctx.per_shard_stats

@@ -15,7 +15,21 @@ def get_spark(
     """AQE on (runtime re-plan, skew-join, partition coalescing), Arrow on
     (every pandas UDF crosses via Arrow batches), and shuffle partition
     count sized to the box — on a real cluster these come from
-    spark-submit conf instead."""
+    spark-submit conf instead.
+
+    These confs serve the build and the mutations. The read path does
+    not use this session's SQLConf: ``RetrievalEngine.query_ctx`` opens
+    every context on a ``newSession()`` of its own, with AQE off, and
+    sizes it once to the index (``api._size_query_session``):
+    ``minPartitionNum=1``, ``maxPartitionBytes = max(largest postings
+    file + openCost + 1, PY_TASK_BYTES)`` and ``shuffle.partitions =
+    clamp(ceil(postings bytes / PY_TASK_BYTES), 1, num_shards)``, with
+    ``PY_TASK_BYTES`` = 32 MB. A read-path Python task costs ~0.3 s of
+    worker CPU before it reads a row — mostly pyspark's per-task
+    ``importlib.invalidate_caches()``, which re-lists every zip
+    importer (pyspark.zip once per imported subpackage) — so a query
+    runs one scoring task per 32 MB of postings rather than one per
+    core, and no postings file splits across scan tasks."""
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if cpus and master.startswith("local["):

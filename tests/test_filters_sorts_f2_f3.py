@@ -244,7 +244,7 @@ def test_batch_filter_analyzed_leaves_share_one_scan(corpus_engine):
         single = corpus_engine.filter(q).collect()
         assert [g["_id"] for g in got] == [s["_id"] for s in single], qid
 
-    sc = corpus_engine.query_spark.sparkContext
+    sc = corpus_engine.spark.sparkContext
     tracker = sc.statusTracker()
 
     def run(queries, tag):

@@ -369,7 +369,7 @@ def test_batch_vector_probe_is_shared(vec_engine):
         v = rng.standard_normal(64)
         return [float(x) for x in (v / np.linalg.norm(v))]
 
-    sc = vec_engine.query_spark.sparkContext
+    sc = vec_engine.spark.sparkContext
     tracker = sc.statusTracker()
 
     def run(n, tag):
